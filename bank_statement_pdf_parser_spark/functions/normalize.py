@@ -95,7 +95,8 @@ def per_bank(expr_fn) -> Column:
 def normalize_records(records: DataFrame,
                       carry: tuple[str, ...] = ()) -> DataFrame:
     """records (tokenizer/relational output) -> `transactions` frame
-    per spec.TRANSACTIONS_DDL, minus txn_idx (assigned by the caller).
+    per spec.TRANSACTIONS_DDL, with rec_ord in place of txn_idx (the
+    caller names it).
     `carry`: extra input columns passed through untouched (the sink's
     bucket column)."""
     w = amount_struct(F.col("wdr_cell"))
@@ -148,5 +149,5 @@ def normalize_records(records: DataFrame,
         debit.alias("debit"), credit.alias("credit"),
         bal["val"].alias("balance"),
         F.col("page"), F.col("line_start"), F.col("line_end"),
-        "span_start",  # kept for ordering; dropped by caller
+        "rec_ord",  # the turn-local ordinal; the caller's txn_idx
     )

@@ -20,6 +20,8 @@ Dataflow and the shuffles it costs (vs zero text shuffles fused):
    D9/D10 groupBy(conv,turn,txn_grp) ordered collect ... 1 Exchange
    D11 row_number over (conv,turn,anchor_raw) .......... 1 Exchange
    span_text: equi-join back to turn docs + substring .. 1 Exchange (J2)
+   rec_ord/span_base: row_number + running sum(1+size(cells)) over
+       (conv,turn) ordered by line_start ............... 1 Exchange
 
 At 10^12-turn scale those three text-bearing Exchanges are exactly why
 the fused tokenizer is the default mode; this module is the spec-equal
@@ -340,6 +342,19 @@ def relational_records(stmt: DataFrame) -> DataFrame:
                             F.col("span_start") + 1,
                             F.col("span_end") - F.col("span_start")))
             .drop("doc", "anchor_raw"))
+
+    # turn-local ordinals (tokenize._RECORD_SCHEMA), computed here by
+    # a window: this cross-check path has no per-turn kernel to count
+    # in, and both ordinals share the one window's exchange
+    wt = Window.partitionBy("conv_id", "turn_idx").orderBy("line_start")
+    n_spans = 1 + F.size("cells")
+    recs = (recs
+            .withColumn("rec_ord",
+                        (F.row_number().over(wt) - 1).cast("int"))
+            .withColumn("span_base",
+                        (F.sum(n_spans).over(wt.rowsBetween(
+                            Window.unboundedPreceding, Window.currentRow))
+                         - n_spans).cast("int")))
 
     from .tokenize import _RECORD_COLS
     return recs.select(*_RECORD_COLS)

@@ -6,8 +6,9 @@ dedup and span offsets of one turn depend only on that turn's document
 text. Shuffling 100 TB of raw lines across the cluster just to window
 them back per-turn would be the dominant cost at scale, so the default
 plan fuses D2+D4+D8-D11 into ONE `mapInPandas` pass over Arrow batches
-of turn rows: zero shuffles touch raw text; only extracted records
-(~1000x smaller) ever hit an Exchange. SURVEY.md §4.2 explicitly
+of turn rows: zero shuffles touch raw text, and since the kernel also
+assigns the turn-local output ordinals (below) the fused spans and
+transactions plans need no Exchange at all. SURVEY.md §4.2 explicitly
 blesses this fusion; the un-fused pure-Catalyst composition of the same
 operators lives in `relational.py` and is cross-checked for equality.
 
@@ -43,12 +44,17 @@ and `desc_parts`. `tokenize_kernel(profile)` returns a kernel that
 parses IDENTICALLY but only materializes the requested column subset:
 
 - 'full'         -> RECORDS_DDL (the staged-records contract; default)
-- 'transactions' -> RECORDS_TXN_DDL: no span_end/span_text/cells, and
-                    HTML turns are skipped at source (their pseudo-
-                    records carry no transaction fields — downstream
-                    filters bank != 'HTML' anyway)
+- 'transactions' -> RECORDS_TXN_DDL: no span_end/span_text/cells/
+                    span_base, and HTML turns are skipped at source
+                    (their pseudo-records carry no transaction fields
+                    — downstream filters bank != 'HTML' anyway)
 - 'spans'        -> RECORDS_SPAN_DDL: no field cells / desc_parts /
-                    period triple / page geometry
+                    period triple / page geometry / rec_ord
+
+TURN-LOCAL ORDINALS: the output indices are turn-local too, so the
+kernel assigns them — `rec_ord` (the txn_idx) and `span_base` (the
+head span's span_idx; see _RECORD_SCHEMA) — and the plan derives
+span_idx/txn_idx without a per-output window exchange.
 
 Equivalence of every profile to a projection of the full kernel is
 test-enforced (tests/test_operators.py::test_kernel_profiles_project).
@@ -70,41 +76,46 @@ import pandas as pd
 from .. import spec
 from .html import _spans_one as _html_spans
 
-# mapInPandas output: one row per surviving transaction record.
-RECORDS_DDL = (
-    "conv_id string, turn_idx int, bank string, page int, "
-    "line_start int, line_end int, span_start int, span_end int, "
-    "span_text string, date_cell string, vdate_cell string, "
-    "wdr_cell string, dep_cell string, bal_cell string, ref_cell string, "
-    "desc_parts array<string>, "
-    "cells array<struct<start:int,end:int,text:string>>, "
-    "p_start_mon int, p_start_year int, p_end_year int"
-)
-
-_RECORD_COLS = [
-    "conv_id", "turn_idx", "bank", "page", "line_start", "line_end",
-    "span_start", "span_end", "span_text", "date_cell", "vdate_cell",
-    "wdr_cell", "dep_cell", "bal_cell", "ref_cell", "desc_parts", "cells",
-    "p_start_mon", "p_start_year", "p_end_year",
+# mapInPandas output: one row per surviving transaction record (plus
+# one bank='HTML' pseudo-record per HTML main span), as (name, DDL
+# type) in output order — the single source of every records schema.
+#
+# Turn-local ordinals (both 0-based, per (conv_id, turn_idx) input
+# row, filled by every kernel):
+# - rec_ord: the record's index within its turn in span_start (=
+#   line_start) order — the transaction's txn_idx;
+# - span_base: span_idx of the record's head span, the exclusive
+#   prefix sum of 1 + len(cells) over the turn's earlier records.
+#   Records' spans never interleave (groups are disjoint line ranges,
+#   a row's cells start after its leading rail, D11 drops whole
+#   groups), so span_base + position in [head, *cells] IS the
+#   span_start-ordered span_idx.
+_CELL_DDL = "array<struct<start:int,end:int,text:string>>"
+_RECORD_SCHEMA = [
+    ("conv_id", "string"), ("turn_idx", "int"), ("bank", "string"),
+    ("page", "int"), ("line_start", "int"), ("line_end", "int"),
+    ("span_start", "int"), ("span_end", "int"), ("span_text", "string"),
+    ("date_cell", "string"), ("vdate_cell", "string"),
+    ("wdr_cell", "string"), ("dep_cell", "string"),
+    ("bal_cell", "string"), ("ref_cell", "string"),
+    ("desc_parts", "array<string>"), ("cells", _CELL_DDL),
+    ("p_start_mon", "int"), ("p_start_year", "int"),
+    ("p_end_year", "int"), ("rec_ord", "int"), ("span_base", "int"),
 ]
+_COL_TYPES = dict(_RECORD_SCHEMA)
 
-_COL_TYPES = dict(
-    (f.strip().split(" ", 1)[0], f.strip().split(" ", 1)[1])
-    for f in RECORDS_DDL.replace(
-        "struct<start:int,end:int,text:string>", "STRUCT").split(", "))
-
+_RECORD_COLS = [c for c, _ in _RECORD_SCHEMA]
 _TXN_COLS = [c for c in _RECORD_COLS
-             if c not in ("span_end", "span_text", "cells")]
+             if c not in ("span_end", "span_text", "cells", "span_base")]
 _SPAN_COLS = ["conv_id", "turn_idx", "bank",
-              "span_start", "span_end", "span_text", "cells"]
+              "span_start", "span_end", "span_text", "cells", "span_base"]
 
 
 def _ddl_for(cols: list[str]) -> str:
-    return ", ".join(
-        f"{c} {_COL_TYPES[c].replace('STRUCT', 'struct<start:int,end:int,text:string>')}"
-        for c in cols)
+    return ", ".join(f"{c} {_COL_TYPES[c]}" for c in cols)
 
 
+RECORDS_DDL = _ddl_for(_RECORD_COLS)
 RECORDS_TXN_DDL = _ddl_for(_TXN_COLS)
 RECORDS_SPAN_DDL = _ddl_for(_SPAN_COLS)
 
@@ -302,6 +313,27 @@ def _opt_ints(series: pd.Series) -> list[int | None]:
     return [None if m else int(v) for m, v in zip(mask, vals)]
 
 
+_CELLS_IDX = _RECORD_COLS.index("cells")
+
+
+def _turn_ordinals(per_doc: list[int], cells) -> dict[str, np.ndarray]:
+    """rec_ord and span_base (see _RECORD_SCHEMA) of one batch's
+    records, which are doc-major with per_doc[i] records from kept
+    input row i. `cells` is the records' cell-list column, or None
+    when the profile does not materialize cells (no span_base then).
+    Vectorized: counting them per record inside the python loop cost
+    ~8% of kernel time (fixture corpus, 4-core host)."""
+    counts = np.asarray(per_doc, dtype=np.int64)
+    # index of each record's first sibling record (same input row)
+    first = np.repeat(np.cumsum(counts) - counts, counts)
+    out = {"rec_ord": (np.arange(len(first)) - first).astype(np.int32)}
+    if cells is not None:
+        n_spans = 1 + np.fromiter(map(len, cells), np.int64, len(cells))
+        excl = np.cumsum(n_spans) - n_spans
+        out["span_base"] = (excl - excl[first]).astype(np.int32)
+    return out
+
+
 def tokenize_kernel(profile: str = "full"):
     """Return a mapInPandas kernel materializing the given column
     profile (module docstring). 'full' is `tokenize_records`."""
@@ -317,6 +349,7 @@ def tokenize_kernel(profile: str = "full"):
     else:
         raise ValueError(profile)
     keep = [(name, _RECORD_COLS.index(name)) for name in cols]
+    want_cells = want["want_cells"]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -329,20 +362,25 @@ def tokenize_kernel(profile: str = "full"):
                              _opt_ints(pdf["p_end_year"])))
             rows: list[tuple] = []
             append = rows.append
+            per_doc: list[int] = []   # records of each kept input row
             for cid, ti, doc, kind, tail in zip(
                     cids, tis, docs, kinds, tails):
                 if kind == "HTML":
                     if skip_html:
                         continue
-                    for s in _html_spans(doc):
+                    spans = _html_spans(doc)
+                    for s in spans:
                         append((cid, ti, "HTML", None, None, None,
                                 s["span_start"], s["span_end"], s["text"],
                                 None, None, None, None, None, None, [], [],
                                 None, None, None))
+                    per_doc.append(len(spans))
                     continue
                 head = (cid, ti, kind)
-                for rec in _parse_doc(doc, kind, **want):
+                recs = _parse_doc(doc, kind, **want)
+                for rec in recs:
                     append(head + rec + tail)
+                per_doc.append(len(recs))
             if rows:
                 # empty frames are skipped: all-empty object columns
                 # cannot be Arrow-converted to array<string>/struct
@@ -350,8 +388,14 @@ def tokenize_kernel(profile: str = "full"):
                 # WITHOUT block consolidation (a dict ctor would vstack
                 # all columns into one block) — see module docstring.
                 by_col = list(zip(*rows))
+                ords = _turn_ordinals(
+                    per_doc, by_col[_CELLS_IDX] if want_cells else None)
                 series = []
                 for name, idx in keep:
+                    if name in ords:
+                        series.append(pd.Series(ords[name], name=name,
+                                                copy=False))
+                        continue
                     col = by_col[idx]
                     arr = np.empty(len(col), dtype=object)
                     arr[:] = col

@@ -15,22 +15,25 @@ implementation.
 Eligibility is chosen so every vectorized operation is EXACTLY
 equivalent to the python/oracle semantics, not approximately:
 
-- kind in {UOB, DBS, HDFC} (stream-table slicing; OCBC lattice and
-  HTML keep their python kernels);
+- kind in {UOB, DBS, HDFC, OCBC}: stream-table slicing and the OCBC
+  lattice cell walk (D6) are vectorized; HTML keeps its python kernel;
 - pure ASCII and no [\\v\\x1c-\\x1f]: python's unicode `\\s` /
   `str.strip()` then coincide with RE2's `[\\t\\n\\f\\r ]` and an
   explicit `" \\t\\r"` trim on the split lines (`\\f` and `\\n` are the
   separators, so they cannot appear inside a line);
-- every anchor line exactly STREAM_LINE_W wide: the frozen fixed
-  SLICES apply (no D7 inference).
+- stream banks: every anchor line exactly STREAM_LINE_W wide, so the
+  frozen fixed SLICES apply (no D7 inference);
+- OCBC: no row with enough rails to hold a cell beyond OCBC_CELLS.
 
-Multi-page documents (D4 frequency rule), continuation groups (D9)
-and page-carry dedup (D11, first occurrence per duplicate anchor
-text) are all handled vectorized. The one per-record python operation
-left is the raw span-text slice of MULTI-line groups in the 'spans'
-profile (the span may cover interleaved boilerplate, so it cannot be
-rebuilt from the kept lines); single-line groups — the common case —
-stay zero-object.
+Multi-page documents (D4 frequency rule), continuation groups (D9),
+page-carry dedup (D11, first occurrence per duplicate anchor text)
+and the turn-local ordinals (`rec_ord`, `span_base`: a per-doc
+`arange - searchsorted` and exclusive cumsum of span counts) are all
+handled vectorized. The one per-record python operation left is the
+raw span-text slice of MULTI-line groups in the 'spans' profile (the
+span may cover interleaved boilerplate, so it cannot be rebuilt from
+the kept lines); single-line groups — the common case — stay
+zero-object.
 
 Any document failing a predicate routes to the python kernel in the
 same batch; the corpus mix therefore never changes results, only the
@@ -51,8 +54,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .. import spec
-from .tokenize import (_RECORD_COLS, _SPAN_COLS, _TXN_COLS,
-                       tokenize_kernel)
+from .tokenize import (_CELL_DDL, _RECORD_COLS, _RECORD_SCHEMA,
+                       _SPAN_COLS, _TXN_COLS, tokenize_kernel)
 
 _FAST_BANKS = ("UOB", "DBS", "HDFC", "OCBC")
 # chars that break python<->RE2 whitespace equivalence when inside a
@@ -62,18 +65,12 @@ _TRIM_SET = " \t\r"
 
 _CELL_STRUCT = pa.struct([("start", pa.int32()), ("end", pa.int32()),
                           ("text", pa.string())])
-_TYPES = {
-    "conv_id": pa.string(), "turn_idx": pa.int32(), "bank": pa.string(),
-    "page": pa.int32(), "line_start": pa.int32(), "line_end": pa.int32(),
-    "span_start": pa.int32(), "span_end": pa.int32(),
-    "span_text": pa.string(), "date_cell": pa.string(),
-    "vdate_cell": pa.string(), "wdr_cell": pa.string(),
-    "dep_cell": pa.string(), "bal_cell": pa.string(),
-    "ref_cell": pa.string(), "desc_parts": pa.list_(pa.string()),
-    "cells": pa.list_(_CELL_STRUCT),
-    "p_start_mon": pa.int32(), "p_start_year": pa.int32(),
-    "p_end_year": pa.int32(),
-}
+# Arrow type of each records DDL type: the schema itself has one
+# source, tokenize._RECORD_SCHEMA
+_DDL_ARROW = {"string": pa.string(), "int": pa.int32(),
+              "array<string>": pa.list_(pa.string()),
+              _CELL_DDL: pa.list_(_CELL_STRUCT)}
+_TYPES = {c: _DDL_ARROW[t] for c, t in _RECORD_SCHEMA}
 
 _PROFILE_COLS = {"transactions": _TXN_COLS, "spans": _SPAN_COLS,
                  "full": _RECORD_COLS}
@@ -220,12 +217,17 @@ def _fast_bank_records(bank: str, docs: pa.Array, profile: str):
     span_start = line_off[a_idx]
     span_end = line_off[last_idx] + rstrip_last
 
+    # turn-local ordinals: records are doc-major in anchor order, so a
+    # record's index within its doc is its offset from the doc's first
+    doc_first = np.searchsorted(a_doc, a_doc)
+    rec_ord = np.arange(n) - doc_first
     cols: dict[str, pa.Array] = {
         "bank": pa.array(np.full(n, bank, dtype=object), pa.string()),
         "page": _i32(page_of_line[a_idx]),
         "line_start": _i32(line_idx[a_idx]),
         "line_end": _i32(line_idx[last_idx]),
         "span_start": _i32(span_start),
+        "rec_ord": _i32(rec_ord),
     }
 
     if profile != "transactions":        # spans / full
@@ -279,6 +281,7 @@ def _fast_bank_records(bank: str, docs: pa.Array, profile: str):
             cols["cells"] = pa.ListArray.from_arrays(
                 np.zeros(n + 1, dtype=np.int32),
                 pa.array([], _CELL_STRUCT))
+            cols["span_base"] = cols["rec_ord"]   # cell-less records
         return a_doc, cols, fallback_docs
 
     # ---- OCBC lattice cell walk, vectorized (D6) ----
@@ -320,6 +323,10 @@ def _fast_bank_records(bank: str, docs: pa.Array, profile: str):
         cols["cells"] = pa.ListArray.from_arrays(
             np.concatenate(([0], np.cumsum(cells_per_rec)))
             .astype(np.int32), struct)
+        # per-doc exclusive prefix sum of each record's span count
+        n_spans = 1 + cells_per_rec
+        excl = np.cumsum(n_spans) - n_spans
+        cols["span_base"] = _i32(excl - excl[doc_first])
     if profile == "spans":
         return a_doc, cols, fallback_docs
 

@@ -7,22 +7,23 @@ fused (default): transcripts --(P1-P3 Catalyst)--> resolved turns
     spans = txn spans U table_cell spans U main spans   (O3)
 relational: statement turns go through the pure-Catalyst operator
     composition; HTML turns through the D5 pandas UDF (U1) branch.
-span_idx / txn_idx via W1 window over (conv_id, turn_idx)
+span_idx / txn_idx (W1) from the turn-local ordinals every records
+    producer emits (rec_ord, span_base — operators/tokenize.py): no
+    window, no exchange
 
 Scale shape: in fused mode raw text is scanned ONCE per action and
-never crosses an Exchange — the only shuffles are over extracted
-*records* (orders of magnitude smaller than the corpus), for the
-per-turn index windows. Long-document skew is structurally bounded
-because every stage is turn-local (a group is one turn, never a whole
-conversation); residual skew from statement-heavy input splits is
-handled by AQE + the optional salt repartition below.
+nothing crosses an Exchange — spans and transactions are map-only
+plans over the tokenizer output. Long-document skew is structurally
+bounded because every stage is turn-local (a group is one turn, never
+a whole conversation); residual skew from statement-heavy input splits
+is handled by the optional salt repartition below.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import spec
@@ -102,7 +103,7 @@ def build_records(turns: DataFrame, mode: str = "fused",
 
 def build_spans(turns: DataFrame | None, records: DataFrame,
                 records_include_html: bool = False,
-                window_prefix: tuple[str, ...] = ()) -> DataFrame:
+                carry: tuple[str, ...] = ()) -> DataFrame:
     """All span kinds in ONE pass over records: each record explodes
     into its head span (txn, or main for HTML pseudo-records) plus its
     lattice cell spans. A union of sibling selects over `records`
@@ -110,19 +111,16 @@ def build_spans(turns: DataFrame | None, records: DataFrame,
     one action would tokenize the corpus 2-3x — so the array-concat +
     single explode shape matters at scale.
 
-    window_prefix: extra columns prepended to the span_idx window's
-    partitionBy AND carried into the output. Meant for columns that
-    are FUNCTIONS OF conv_id (the sink's bucket column): the window
-    semantics are unchanged, but a child already hash-partitioned on
-    the prefix then SATISFIES the window's required clustering — one
-    upstream repartition(n, prefix) serves both the window and a
-    bucket-aligned partitionBy write, instead of one exchange each
-    (measured on the sink: two records-sized exchanges per derived
-    output down to one). Only the fused path supports it (the
-    relational cross-check branch unions spans from `turns`, which
-    does not carry the prefix)."""
-    if window_prefix and not records_include_html:
-        raise ValueError("window_prefix requires records_include_html")
+    span_idx = span_base + position in [head, *cells]: the kernels
+    assign span_base turn-locally (tokenize._RECORD_SCHEMA), so no
+    window — and no exchange — is needed. The relational cross-check
+    branch numbers HTML main spans by their explode position (an HTML
+    turn has no statement records).
+
+    carry: extra record columns passed through to the output (the
+    sink's bucket column)."""
+    if carry and not records_include_html:
+        raise ValueError("carry requires records_include_html")
     head_kind = (F.when(F.col("bank") == "HTML",
                         F.lit(spec.SPAN_KIND_MAIN))
                  .otherwise(F.lit(spec.SPAN_KIND_TXN))
@@ -139,50 +137,41 @@ def build_spans(turns: DataFrame | None, records: DataFrame,
         c["start"].alias("span_start"), c["end"].alias("span_end"),
         F.lit(spec.SPAN_KIND_CELL).alias("span_kind"),
         c["text"].alias("text")))
-    rec_spans = (records.select(
-        *window_prefix, "conv_id", "turn_idx",
-        F.explode(F.concat(head, cell_spans)).alias("s"))
-        .select(*window_prefix, "conv_id", "turn_idx",
-                F.col("s.span_start").alias("span_start"),
-                F.col("s.span_end").alias("span_end"),
-                F.col("s.span_kind").alias("span_kind"),
-                F.col("s.text").alias("text")))
+
+    def spans_of(df: DataFrame, base: Column, arr: Column,
+                 kind: Column) -> DataFrame:
+        return (df.select(*carry, "conv_id", "turn_idx",
+                          base.alias("_base"),
+                          F.posexplode(arr).alias("_pos", "s"))
+                .select(*carry, "conv_id", "turn_idx",
+                        (F.col("_base") + F.col("_pos")).cast("int")
+                        .alias("span_idx"),
+                        F.col("s.span_start").cast("int")
+                        .alias("span_start"),
+                        F.col("s.span_end").cast("int").alias("span_end"),
+                        kind.alias("span_kind"),
+                        F.col("s.text").alias("text")))
+
+    spans = spans_of(records, F.col("span_base"),
+                     F.concat(head, cell_spans), F.col("s.span_kind"))
     if records_include_html:
-        allspans = rec_spans
-    else:
-        # relational cross-check mode: HTML turns via the D5 pandas UDF
-        main_spans = (
-            turns.filter(F.col("kind") == "HTML")
-            .select("conv_id", "turn_idx",
-                    F.explode(html_main_spans(F.col("doc"))).alias("s"))
-            .select("conv_id", "turn_idx",
-                    F.col("s.span_start").alias("span_start"),
-                    F.col("s.span_end").alias("span_end"),
-                    F.lit(spec.SPAN_KIND_MAIN).alias("span_kind"),
-                    F.col("s.text").alias("text"))
-        )
-        allspans = rec_spans.unionByName(main_spans)
-    w = (Window.partitionBy(*window_prefix, "conv_id", "turn_idx")
-         .orderBy("span_start"))
-    return allspans.select(
-        *window_prefix, "conv_id", "turn_idx",
-        (F.row_number().over(w) - 1).cast("int").alias("span_idx"),
-        F.col("span_start").cast("int"), F.col("span_end").cast("int"),
-        "span_kind", "text")
+        return spans
+    # relational cross-check mode: HTML turns via the D5 pandas UDF
+    main_spans = spans_of(turns.filter(F.col("kind") == "HTML"), F.lit(0),
+                          html_main_spans(F.col("doc")),
+                          F.lit(spec.SPAN_KIND_MAIN))
+    return spans.unionByName(main_spans)
 
 
 def build_transactions(records: DataFrame,
-                       window_prefix: tuple[str, ...] = ()) -> DataFrame:
-    """window_prefix: see build_spans — same contract (prefix columns
-    must be functions of conv_id; they join the txn_idx window's
-    partitionBy and the output)."""
+                       carry: tuple[str, ...] = ()) -> DataFrame:
+    """txn_idx is the kernel-assigned turn-local rec_ord (no window).
+    carry: see build_spans."""
     norm = normalize_records(records.filter(F.col("bank") != "HTML"),
-                             carry=window_prefix)
-    w = (Window.partitionBy(*window_prefix, "conv_id", "turn_idx")
-         .orderBy("line_start"))
+                             carry=carry)
     return norm.select(
-        *window_prefix, "conv_id", "turn_idx",
-        (F.row_number().over(w) - 1).cast("int").alias("txn_idx"),
+        *carry, "conv_id", "turn_idx",
+        F.col("rec_ord").cast("int").alias("txn_idx"),
         "bank", "txn_date", "value_date", "description", "ref",
         "debit", "credit", "balance",
         F.col("page").cast("int"), F.col("line_start").cast("int"),

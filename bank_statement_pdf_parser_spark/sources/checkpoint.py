@@ -21,31 +21,36 @@ Cost shape per bucket group (the 100 TB hot path):
 
 1. ONE pass over raw text: the fused tokenizer writes the staged
    `records` dataset (txn records + HTML main-span pseudo-records,
-   ~1000x smaller than the corpus). Per-bucket INPUT metrics
+   ~1000x smaller than the corpus), repartitioned by bucket so each
+   bucket partition is ~one file. Per-bucket INPUT metrics
    (rows_in/bytes_in) ride this same job via `df.observe`
    conditional aggregates — no separate metrics scan. (Only those
    two: CollectMetrics accumulators cost ~linearly in aggregates x
-   rows, so the conv-id range comes from step 2's pruned staged read
-   instead — see run().)
+   rows.)
 2. spans + transactions are derived from the staged records parquet —
-   two cheap jobs that never touch raw text, submitted CONCURRENTLY
-   (neither saturates the cluster alone; the scheduler interleaves
-   their stages) alongside the tiny per-bucket conv-range aggregation
-   over the staged records (conv_id_min/max in lineage = the range of
-   the bucket's extracted records; NULL for a bucket with none).
-3. GROUPS PIPELINE (round 6): while group g's derived jobs run on a
+   two MAP-ONLY jobs that never touch raw text, submitted
+   CONCURRENTLY (neither saturates the cluster alone). The records
+   carry turn-local ordinals from the tokenizer (span_base, rec_ord),
+   so span_idx/txn_idx need no window, and the bucket column rides
+   through to the partitionBy(bucket) write: no exchange at all, and
+   the one-file-per-bucket staged layout keeps the derived writes at
+   ~one file per bucket.
+3. Per-bucket lineage comes from parquet FOOTERS — metadata-only (no
+   data pages read, no read-back job, never a re-run of the
+   extraction DAG), and the literal Iceberg mapping: snapshot
+   manifests carry the same per-file row counts and column bounds.
+   OUTPUT counts are the row counts of the files each derived write
+   just committed (round 6: replaced a per-bucket conditional-count
+   Observation whose accumulators cost ~(buckets x output rows) on
+   the hot write); the conv-id range is the staged records' conv_id
+   column statistics (a pruned aggregation job only if a footer
+   lacks exact bounds).
+4. GROUPS PIPELINE (round 6): while group g's derived jobs run on a
    single pipeline slot, group g+1's raw pass proceeds on the caller
    thread — between-phase idle time disappears at multi-group scale.
    Manifests still commit strictly after their group's writes, in
    group order; a crash lets in-flight derived work finish (its
    manifests are legitimate) and reprocesses only unstaged groups.
-3. Per-bucket OUTPUT counts come from the parquet FOOTERS of the
-   files each write just committed — metadata-only (no data pages
-   read, no read-back job, never a re-run of the extraction DAG),
-   and the literal Iceberg mapping: snapshot manifests carry the
-   same per-file row counts. (Round 6: replaced a per-bucket
-   conditional-count Observation whose accumulators cost
-   ~(buckets x output rows) on the hot write.)
 
 Tests assert (via a tokenizer-call accumulator) that the extraction
 kernel sees each turn exactly once per run.
@@ -341,9 +346,9 @@ class CheckpointedExtract:
             # accumulators cost ~linearly in (aggregates x rows)
             # regardless of expression complexity (measured round 6:
             # even 128 sum(lit(0)) aggs added ~0.5 s on this corpus),
-            # so the conv-id range moved OFF this job — it is computed
-            # from the staged records by a concurrent pruned-column
-            # job below, where it is practically free.
+            # so the conv-id range moved OFF this job — it is read
+            # from the staged records' parquet footers in the derive
+            # phase, at zero Spark jobs.
             obs = Observation()
             aggs = []
             for b in group:
@@ -389,24 +394,15 @@ class CheckpointedExtract:
         return RunResult(self.run_id, [b for g in groups for b in g],
                          sorted(done), metrics_all)
 
-    def _derive_and_commit(self, spark, group, m_in, gsrc,
-                           records_dir, spans_dir, txns_dir) -> list[dict]:
-        """Phase 2 of one bucket group: spans + transactions derived
-        from the staged records (no raw text), conv-range aggregation,
-        per-bucket manifest commits. Runs on the pipeline slot so the
-        next group's raw pass can proceed concurrently.
+    def _derived_frames(self, spark, group, gsrc, records_dir):
+        """(spans, transactions) of one bucket group, derived from the
+        staged records (no raw text). Explicit schema on the staged
+        read: skips inference listing, and an all-empty group writes
+        no files to infer from.
 
-        Explicit schema on the staged read: skips inference listing,
-        and an all-empty group writes no files to infer from.
-
-        Fused path: ONE repartition(n, bucket) on the staged records
-        is the ONLY exchange per derived output — the bucket column
-        joins the span/txn index windows' partitionBy (bucket is a
-        function of conv_id, so the numbering is unchanged), which
-        makes hash(bucket) satisfy the window's clustering
-        requirement, and the same clustering makes the
-        partitionBy(bucket) write emit ~1 file per bucket with no
-        second repartition."""
+        Fused path: map-only — the kernel-assigned ordinals replace
+        the index windows, and the bucket column is carried into the
+        output for the partitionBy(bucket) write."""
         from ..operators.tokenize import RECORDS_DDL
         os.makedirs(records_dir, exist_ok=True)
         staged = (spark.read
@@ -414,21 +410,24 @@ class CheckpointedExtract:
                   .parquet(records_dir)
                   .filter(F.col(BUCKET).isin(group)))
         if self.mode == "fused":
-            staged = staged.repartition(self.n_buckets, BUCKET)
-            spans = build_spans(None, staged,
-                                records_include_html=True,
-                                window_prefix=(BUCKET,))
-            txns = build_transactions(staged,
-                                      window_prefix=(BUCKET,))
-        else:
-            # relational records exclude HTML; the D5 pandas-UDF
-            # branch re-reads the HTML turns (cross-check mode
-            # only, not the hot path — keeps the two-exchange
-            # shape because spans also derive from raw turns)
-            staged = staged.drop(BUCKET)
-            turns2 = with_resolved_payload(gsrc.drop(BUCKET))
-            spans = build_spans(turns2, staged)
-            txns = build_transactions(staged)
+            return (build_spans(None, staged, records_include_html=True,
+                                carry=(BUCKET,)),
+                    build_transactions(staged, carry=(BUCKET,)))
+        # relational records exclude HTML; the D5 pandas-UDF branch
+        # re-reads the HTML turns (cross-check mode only, not the hot
+        # path), so its outputs are re-bucketed at write time
+        staged = staged.drop(BUCKET)
+        turns2 = with_resolved_payload(gsrc.drop(BUCKET))
+        return build_spans(turns2, staged), build_transactions(staged)
+
+    def _derive_and_commit(self, spark, group, m_in, gsrc,
+                           records_dir, spans_dir, txns_dir) -> list[dict]:
+        """Phase 2 of one bucket group: spans + transactions derived
+        from the staged records (_derived_frames), footer-based
+        lineage, per-bucket manifest commits. Runs on the pipeline
+        slot so the next group's raw pass can proceed concurrently."""
+        from ..operators.tokenize import RECORDS_DDL
+        spans, txns = self._derived_frames(spark, group, gsrc, records_dir)
 
         # the two derived jobs share the staged input and neither
         # saturates the cluster alone — submit them CONCURRENTLY
@@ -445,8 +444,9 @@ class CheckpointedExtract:
         # trim, CLAUDE.md).
         def observed_write(out_df, path):
             if BUCKET in out_df.columns:
-                # fused path: already carries bucket AND is hash-
-                # partitioned on it upstream — no exchange here
+                # fused path: carries bucket; the staged layout (~one
+                # file per bucket) bounds the files written per bucket
+                # to that file's read splits — no exchange here
                 bucketed = out_df
             else:
                 bucketed = (with_bucket(out_df, self.n_buckets)

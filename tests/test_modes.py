@@ -65,3 +65,34 @@ def test_extraction_tolerates_extra_input_columns(spark, transcripts_path,
     assert sa == sb
     assert (a.transactions.count() == b.transactions.count()
             and a.transactions.count() > 0)
+
+
+def _physical_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_fused_outputs_need_no_index_window(spark, transcripts_path):
+    """span_idx/txn_idx come from the kernel's turn-local ordinals:
+    the fused spans and transactions plans carry no Window and no
+    per-turn hash exchange."""
+    out = extract_all(spark.read.parquet(transcripts_path))
+    for df in (out.spans, out.transactions):
+        plan = _physical_plan(df)
+        assert "Window" not in plan, plan
+        assert "Exchange hashpartitioning(conv_id" not in plan, plan
+
+
+def test_sink_derived_frames_are_map_only(spark, tmp_path):
+    """The sink's derived spans/transactions frames read the staged
+    records (one file per bucket) and write partitionBy(bucket) with
+    no Exchange in between."""
+    from bank_statement_pdf_parser_spark.sources.checkpoint import (
+        CheckpointedExtract)
+    ck = CheckpointedExtract(str(tmp_path / "sink"), "plan", n_buckets=4)
+    spans, txns = ck._derived_frames(spark, [0, 1], None,
+                                     str(tmp_path / "sink" / "records"))
+    for df in (spans, txns):
+        assert "bucket" in df.columns
+        plan = _physical_plan(df)
+        assert "Exchange" not in plan, plan
+        assert "Window" not in plan, plan

@@ -456,6 +456,11 @@ def _edge_turns_frame():
     a1 = uline("05 Jan 2026", "ALPHA", "1.00", "", "10.00")
     a2 = uline("06 Jan 2026", "BETA", "", "2.00", "12.00")
     a3 = uline("07 Jan 2026", "REF X9 GAMMA", "3.00", "", "9.00")
+    def oline(d, desc, wdr, dep, bal):
+        return ("|" + d.ljust(6) + "|" + desc.ljust(40) + "|"
+                + wdr.rjust(12) + "|" + dep.rjust(12) + "|"
+                + bal.rjust(12) + "|")
+
     dbs_hdr = ("DBS BANK LTD\nAccount No: 000000042\n"
                "Statement Date: 28/02/2026\n\n")
     dline = ("05/01/2026 06/01/2026 " + "D1".ljust(40)
@@ -515,6 +520,23 @@ def _edge_turns_frame():
                     + "1.00".rjust(12) + "|" + " " * 12 + "|"
                     + "9.00".rjust(12) + "|\n"
                     "Page 1 of 1\nCo. Reg. No. 193200032W", "OCBC"),
+        # lattice records with continuation-row cells, a page-carried
+        # duplicate anchor (D11) and a second page: span ordinals must
+        # advance by each record's cell count
+        "o-cont": ("OCBC BANK\nAccount 000000000042\n"
+                   "Period 01 Nov 2025 - 28 Feb 2026\n\n"
+                   + oline("05 Dec", "LATTE", "1.00", "", "9.00") + "\n"
+                   + oline(" ", "EXTRA FOAM", "", "", "") + "\n"
+                   + oline("06 Dec", "SALARY", "", "5.00", "14.00")
+                   + "\nPage 1 of 3\f"
+                   + oline("06 Dec", "SALARY", "", "5.00", "14.00") + "\n"
+                   + oline(" ", "CARRIED", "", "", "") + "\n"
+                   + oline("07 Jan", "RENT", "2.00", "", "12.00") + "\n"
+                   + oline(" ", "JAN", "", "", "") + "\n"
+                   + oline(" ", "FLAT 2", "", "", "")
+                   + "\nPage 2 of 3\f"
+                   + oline("08 Jan", "FEE", "1.00", "", "11.00")
+                   + "\nPage 3 of 3", "OCBC"),
         "w-html": ('<html><body><nav>c</nav><div class="content">'
                    'Hello &amp; bye<p> mid </p></div>'
                    '<footer>f</footer></body></html>', "HTML"),
@@ -522,6 +544,8 @@ def _edge_turns_frame():
     rows = [(cid, 0, doc, kind,
              *( (11, 2025, 2026) if kind == "OCBC" else (None,) * 3))
             for cid, (doc, kind) in docs.items()]
+    # a second turn of one conversation: ordinals restart per turn
+    rows.append(("u-basic", 1, docs["u-cont"][0], "UOB", None, None, None))
     return pd.DataFrame(rows, columns=[
         "conv_id", "turn_idx", "doc", "kind",
         "p_start_mon", "p_start_year", "p_end_year"])
@@ -561,6 +585,34 @@ def test_kernel_profiles_project():
         == _canon_records(txn, _TXN_COLS)
     assert _canon_records(full, _SPAN_COLS) \
         == _canon_records(spn, _SPAN_COLS)
+
+
+def test_kernel_ordinal_contract():
+    """Per turn, rec_ord is 0..n-1 in span_start order and span_base is
+    the exclusive prefix sum of 1 + len(cells); spans numbered
+    span_base + position in [head, *cells] are then 0..m-1 in
+    span_start order (records' spans never interleave)."""
+    import pandas as pd
+    from bank_statement_pdf_parser_spark.operators.tokenize import (
+        tokenize_kernel)
+    full = pd.concat(list(tokenize_kernel("full")(iter([
+        _edge_turns_frame()]))), ignore_index=True)
+    turns = full.groupby(["conv_id", "turn_idx"], sort=False)
+    # multi-record turns with cells, and a conversation's second turn
+    assert {("o-cont", 0), ("u-basic", 0), ("u-basic", 1)} \
+        <= set(turns.groups)
+    for key, t in turns:
+        t = t.sort_values("span_start")
+        assert list(t["rec_ord"]) == list(range(len(t))), key
+        n_spans = [1 + len(c) for c in t["cells"]]
+        assert list(t["span_base"]) == [
+            sum(n_spans[:i]) for i in range(len(t))], key
+        spans = sorted(
+            (s, int(b) + pos)
+            for b, st, cells in zip(t["span_base"], t["span_start"],
+                                    t["cells"])
+            for pos, s in enumerate([st] + [c["start"] for c in cells]))
+        assert [i for _, i in spans] == list(range(sum(n_spans))), key
 
 
 def test_arrow_kernel_matches_pandas():
