@@ -1,10 +1,11 @@
 """D5: HTML boilerplate strip / main-content span extraction.
 
-Arrow-batched scalar pandas UDF (SURVEY.md U1): for each raw HTML
-payload, keep the text nodes inside the single `<div class="content">`
-region, dropping nav/style/footer chrome. Span offsets index the RAW
-html string; entities are decoded in the extracted text only, never
-re-searched (offset bookkeeping survives decoding, FIXTURES.md §3).
+Arrow-batched scalar pandas UDF (SURVEY.md U1) over the oracle's D5
+walk (`oracle.parser.parse_html`): for each raw HTML payload, keep the
+text nodes inside the single `<div class="content">` region, dropping
+nav/style/footer chrome. Span offsets index the RAW html string;
+entities are decoded in the extracted text only, never re-searched
+(offset bookkeeping survives decoding, FIXTURES.md §3).
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, StringType, StructField,
                                StructType)
 
-from .. import spec
+from ..oracle.parser import parse_html
 
 HTML_SPAN_TYPE = ArrayType(StructType([
     StructField("span_start", IntegerType()),
@@ -22,39 +23,7 @@ HTML_SPAN_TYPE = ArrayType(StructType([
     StructField("text", StringType()),
 ]))
 
-_TAG = spec.rx(spec.HTML_TAG_RX)
-
-
-def _decode(s: str) -> str:
-    for ent, ch in spec.HTML_ENTITIES:
-        s = s.replace(ent, ch)
-    return s
-
-
-def _spans_one(doc: str):
-    start = doc.find(spec.HTML_CONTENT_OPEN)
-    if start < 0:
-        return []
-    start += len(spec.HTML_CONTENT_OPEN)
-    end = doc.find(spec.HTML_CONTENT_CLOSE, start)
-    if end < 0:
-        end = len(doc)
-    out = []
-    pos = start
-    bounds = [(m.start(), m.end()) for m in _TAG.finditer(doc, start, end)]
-    bounds.append((end, end))
-    for a, b in bounds:
-        raw = doc[pos:a]
-        stripped = raw.strip()
-        if stripped:
-            lead = len(raw) - len(raw.lstrip())
-            s = pos + lead
-            out.append({"span_start": s, "span_end": s + len(stripped),
-                        "text": _decode(stripped)})
-        pos = b
-    return out
-
 
 @F.pandas_udf(HTML_SPAN_TYPE)
 def html_main_spans(docs: pd.Series) -> pd.Series:
-    return docs.map(lambda d: _spans_one(d) if isinstance(d, str) else [])
+    return docs.map(lambda d: parse_html(d) if isinstance(d, str) else [])

@@ -8,9 +8,10 @@ D4 frequency rule as a hashed pandas group count, D9 continuation
 groups as segment arithmetic, and field cells as vectorized codepoint
 slices of the anchor-line array — so no per-line Python loop runs and
 (for the vectorized subset) almost no per-record Python object ever
-exists. Everything else falls back, per document, to the frozen python
-parser (`tokenize.py`), which remains the single normative
-implementation.
+exists. Everything else falls back, per document, to the python
+kernel (`tokenize.py`), whose parse is the oracle's structural layer
+(`oracle.parser.statement_records` / `parse_html`) — the single
+normative implementation, which this fast path independently checks.
 
 Eligibility is chosen so every vectorized operation is EXACTLY
 equivalent to the python/oracle semantics, not approximately:

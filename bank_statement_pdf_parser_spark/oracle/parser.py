@@ -1,13 +1,28 @@
 """Plain-Python oracle parser — the reference implementation.
 
-The reference repo publishes only its capability sentence
-(`/root/reference/README.md:2`) and no code, so per BASELINE.json the
-"reference parser" used for the per-turn text/span-offset equality
-contract is this single-process implementation of the frozen spec in
-`spec.py` / FIXTURES.md. It is deliberately written as straight-line,
-row-at-a-time Python (the shape the reference tool would have had):
-readable, obviously-correct, zero Spark. The distributed engine in
+The per-turn text/span-offset equality contract (BASELINE.json) is
+checked against this single-process, Spark-free implementation of the
+frozen spec in `spec.py` / FIXTURES.md; the distributed engine in
 `plans/extract.py` must match its output exactly.
+
+It is written in two layers:
+
+- structure: `statement_records` (D1-D4, D6-D11 -> raw record tuples,
+  the RECORDS_DDL shape) and `parse_html` (D5 spans). These are the
+  engine's ONLY python structural parse: the pandas tokenizer kernel
+  (`operators/tokenize.py`, also the Arrow fast path's per-document
+  fallback) and `html_main_spans` import them, so they keep the
+  kernel's measured fast paths;
+- normalization: `parse_statement` applies F1-F8 in python over those
+  records.
+
+The independent checks are other implementations, not a second python
+copy: for statements, the Arrow-vectorized fast path
+(`tokenize_arrow.py`), relational mode's Catalyst plan (`relational.py`,
+`functions/normalize.py`) and the DuckDB `oracle_sql` of the contract
+gate; for D5, which every mode runs through `parse_html`, the gate's
+`flagship_html_spans` and the hand-computed spans of
+tests/test_operators.py::test_html_entities_and_offsets.
 """
 
 from __future__ import annotations
@@ -17,6 +32,8 @@ import json
 import re
 from datetime import date
 from decimal import Decimal
+from functools import lru_cache
+from itertools import accumulate, chain
 
 from .. import spec
 
@@ -109,142 +126,230 @@ def _ocbc_period(doc: str) -> tuple[date, date] | None:
 
 
 # ---------------------------------------------------------------------------
-# statement parsing
+# statement structure (D1-D4, D6-D11): the one python structural parse
 # ---------------------------------------------------------------------------
 
-def _lines_with_offsets(doc: str):
-    """(page_1based, line_no_global, char_off_global, raw_line) per line."""
-    out = []
-    page_off = 0
-    line_no = 0
-    for pi, page in enumerate(doc.split(spec.PAGE_SEP)):
-        line_off = 0
-        for raw in page.split(spec.LINE_SEP):
-            out.append((pi + 1, line_no, page_off + line_off, raw))
-            line_off += len(raw) + 1
-            line_no += 1
-        page_off += len(page) + 1
-    return out
+# (date, value_date, withdrawal-like, deposit-like, balance, ref) SLICES
+# keys per bank; None = field absent for that bank.
+_FIELD_KEYS = {
+    "DBS": ("date", "value_date", "debit", "credit", "balance", None),
+    "HDFC": ("date", "value_date", "withdrawal", "deposit", "balance",
+             "ref"),
+    "UOB": ("date", None, "withdrawal", "deposit", "balance", None),
+}
+
+_NONE6 = (None, None, None, None, None, None)
 
 
-def _freq_boiler_set(doc: str) -> set[str]:
-    pages = doc.split(spec.PAGE_SEP)
-    if len(pages) < spec.FREQ_RULE_MIN_PAGES:
-        return set()
-    sets = [set(l.strip() for l in p.split(spec.LINE_SEP)) for p in pages]
-    inter = sets[0]
-    for s in sets[1:]:
-        inter = inter & s
-    return inter
+@lru_cache(maxsize=None)
+def _combined_rx(bank: str):
+    """One alternation: boiler patterns first (same precedence as the
+    sequential boiler-then-anchor checks), anchor as named group A.
+    Memoized end-to-end (pattern assembly included): called per doc."""
+    return spec.rx("(?:" + spec.boiler_rx_combined(bank) + ")|(?P<A>"
+                   + spec.ANCHOR_RX[bank] + ")")
 
 
 def _ocbc_cells(raw: str, line_off: int):
-    """(cell_name_idx, start, end, stripped_text) for non-empty cells."""
+    """[(cell_idx, start, end, stripped)] for non-empty cells of one row."""
     parts = raw.split("|")
     pos = 0
     out = []
+    last = len(parts) - 2
     for i, part in enumerate(parts):
-        if 1 <= i <= len(parts) - 2:
+        if 1 <= i <= last:
             stripped = part.strip()
             if stripped:
                 lead = len(part) - len(part.lstrip())
-                start = line_off + pos + lead
-                out.append((i - 1, start, start + len(stripped), stripped))
+                s = line_off + pos + lead
+                out.append((i - 1, s, s + len(stripped), stripped))
         pos += len(part) + 1
     return out
 
 
+def statement_records(doc: str, bank: str, want_text: bool = True,
+                      want_fields: bool = True, want_cells: bool = True):
+    """Structural parse of one statement -> list of record tuples
+    (page, line_start, line_end, span_start, span_end, span_text,
+    date, vdate, wdr, dep, bal, ref, desc_parts, cells), one per kept
+    transaction group in document order. Field cells are raw slices
+    (None = field absent); `cells` holds OCBC {start, end, text}
+    structs ([] for stream banks).
+
+    The want_* flags gate ONLY the materialization of optional outputs
+    (span text slice / field cells + desc_parts / lattice cell structs)
+    — skipped outputs are None in the same tuple slots; the structural
+    parse (grouping, dedup, offsets) is identical for every profile.
+
+    Shaped around the tokenizer's measured hot spots: one memoized
+    combined boiler|anchor match per line, C-level `accumulate` line
+    offsets, the frequency-rule strip pass only on multi-page documents
+    and no page split at all for single-page ones, field cells cut with
+    precomputed slice locals.
+    """
+    comb_match = _combined_rx(bank).match
+
+    if spec.PAGE_SEP in doc:
+        pages = doc.split(spec.PAGE_SEP)
+        lines: list[str] = []
+        page_of: list[int] | None = []
+        multi = len(pages) >= spec.FREQ_RULE_MIN_PAGES
+        page_sets = [] if multi else None
+        for pi, page in enumerate(pages):
+            pl = page.split(spec.LINE_SEP)
+            lines.extend(pl)
+            page_of.extend([pi + 1] * len(pl))
+            if multi:
+                page_sets.append(set(map(str.strip, pl)))
+        freq = set.intersection(*page_sets) if multi else None
+    else:
+        lines = doc.split(spec.LINE_SEP)
+        page_of = None  # single page: page == 1 for every record
+        freq = None
+    # offset of line i = sum(len+1 of previous lines); the +1 covers both
+    # '\n' within a page and the '\f' between pages (single-char each).
+    offs = list(accumulate(chain((0,), (len(r) + 1 for r in lines))))
+
+    # content lines -> transaction groups (running anchor sessionization;
+    # lines before the first anchor are dropped)
+    groups: list[list[int]] = []
+    anchor_raws: list[str] = []
+    append_group = groups.append
+    append_anchor = anchor_raws.append
+    g: list[int] | None = None
+    if freq is None:
+        for i, raw in enumerate(lines):
+            m = comb_match(raw)
+            if m is not None:
+                if m.lastgroup != "A":
+                    continue  # boilerplate (regex rule)
+                g = [i]
+                append_group(g)
+                append_anchor(raw)
+            elif g is not None:
+                g.append(i)
+    else:
+        for i, raw in enumerate(lines):
+            m = comb_match(raw)
+            if m is not None and m.lastgroup != "A":
+                continue  # boilerplate (regex rule)
+            if raw.strip() in freq:
+                continue  # boilerplate (frequency rule)
+            if m is not None:
+                g = [i]
+                append_group(g)
+                append_anchor(raw)
+            elif g is not None:
+                g.append(i)
+
+    seen: set[str] = set()
+    records = []
+    append_record = records.append
+    if bank == "OCBC":
+        for g in groups:
+            a = g[0]
+            a_raw = lines[a]
+            if a_raw in seen:  # D11 page-carry dedup, keep first
+                continue
+            seen.add(a_raw)
+            last = g[-1]
+            span_start = offs[a]
+            span_end = offs[last] + len(lines[last].rstrip())
+            cells_all = [] if want_cells else None
+            a_cells = {}
+            desc_parts = []
+            for j, li in enumerate(g):
+                for ci, s, e, t in _ocbc_cells(lines[li], offs[li]):
+                    if want_cells:
+                        cells_all.append({"start": s, "end": e, "text": t})
+                    name = spec.OCBC_CELLS[ci]
+                    if j == 0:
+                        a_cells[name] = t
+                    elif name == "description":
+                        desc_parts.append(t)
+            desc_parts.insert(0, a_cells.get("description", ""))
+            append_record(
+                (1 if page_of is None else page_of[a], a, last,
+                 span_start, span_end,
+                 doc[span_start:span_end] if want_text else None,
+                 a_cells.get("date"), None,
+                 a_cells.get("withdrawal"), a_cells.get("deposit"),
+                 a_cells.get("balance"), None, desc_parts, cells_all))
+        return records
+
+    if not groups:
+        return records
+    # D7: fixed SLICES for spec-width layouts, whitespace-gap inference
+    # otherwise (frozen rule in spec.infer_stream_slices), over every
+    # group's anchor — D11 duplicates included
+    sl = spec.infer_stream_slices(anchor_raws, bank)
+    cs, ce = sl["description"]
+    if want_fields:
+        dk, vk, wk, pk, bk, rk = _FIELD_KEYS[bank]
+        d0, d1 = sl[dk]
+        v01 = sl[vk] if vk else None
+        w0, w1 = sl[wk]
+        p0, p1 = sl[pk]
+        b0, b1 = sl[bk]
+        r01 = sl[rk] if rk else None
+    for g in groups:
+        a = g[0]
+        a_raw = lines[a]
+        if a_raw in seen:  # D11 page-carry dedup, keep first
+            continue
+        seen.add(a_raw)
+        span_start = offs[a]
+        if len(g) == 1:
+            last = a
+            stripped = a_raw.rstrip()
+            span_end = span_start + len(stripped)
+            txt = stripped if want_text else None
+            desc_parts = [a_raw[cs:ce]] if want_fields else None
+        else:
+            last = g[-1]
+            span_end = offs[last] + len(lines[last].rstrip())
+            txt = doc[span_start:span_end] if want_text else None
+            if want_fields:
+                desc_parts = [a_raw[cs:ce]]
+                desc_parts += [lines[li][cs:ce] for li in g[1:]]
+            else:
+                desc_parts = None
+        fields = (
+            (a_raw[d0:d1],
+             a_raw[v01[0]:v01[1]] if v01 else None,
+             a_raw[w0:w1], a_raw[p0:p1], a_raw[b0:b1],
+             a_raw[r01[0]:r01[1]] if r01 else None)
+            if want_fields else _NONE6)
+        append_record(
+            (1 if page_of is None else page_of[a], a, last,
+             span_start, span_end, txt) + fields + (desc_parts, []))
+    return records
+
+
+# ---------------------------------------------------------------------------
+# statement normalization (F1-F8) over the structural records
+# ---------------------------------------------------------------------------
+
 def parse_statement(doc: str, bank: str):
     """Returns (spans, txns) — span/txn dicts without conv/turn keys."""
-    boiler = spec.rx(spec.boiler_rx_combined(bank))
-    anchor = spec.rx(spec.ANCHOR_RX[bank])
-    freq = _freq_boiler_set(doc)
     period = _ocbc_period(doc) if bank == "OCBC" else None
-
-    content = []
-    for page, line_no, off, raw in _lines_with_offsets(doc):
-        if boiler.match(raw) or raw.strip() in freq:
-            continue
-        content.append((page, line_no, off, raw))
-
-    # group into transactions: anchor line + following continuations
-    groups: list[list[tuple[int, int, int, str]]] = []
-    for item in content:
-        if anchor.match(item[3]):
-            groups.append([item])
-        elif groups:
-            groups[-1].append(item)
-        # lines before the first anchor are dropped
-
-    # dedup page-carry duplicates on exact raw anchor text, keep first
-    seen: set[str] = set()
-    kept = []
-    for g in groups:
-        key = g[0][3]
-        if key in seen:
-            continue
-        seen.add(key)
-        kept.append(g)
-
-    # D7: column cuts for stream-table banks — fixed SLICES when the
-    # layout is spec-width, whitespace-gap inference otherwise
-    if bank != "OCBC" and groups:
-        sl_doc = spec.infer_stream_slices([g[0][3] for g in groups], bank)
-        cont_slice = sl_doc["description"]
-    else:
-        sl_doc, cont_slice = None, None
-
     spans = []
     txns = []
-    for txn_i, g in enumerate(kept):
-        a_page, a_line, a_off, a_raw = g[0]
-        l_page, l_line, l_off, l_raw = g[-1]
-        span_start = a_off
-        span_end = l_off + len(l_raw.rstrip())
+    for txn_i, (page, line_start, line_end, span_start, span_end, text,
+                date_c, vdate_c, wdr_c, dep_c, bal_c, ref_c, desc_parts,
+                cells) in enumerate(statement_records(doc, bank)):
         spans.append({"span_start": span_start, "span_end": span_end,
-                      "span_kind": spec.SPAN_KIND_TXN,
-                      "text": doc[span_start:span_end]})
+                      "span_kind": spec.SPAN_KIND_TXN, "text": text})
+        spans.extend({"span_start": c["start"], "span_end": c["end"],
+                      "span_kind": spec.SPAN_KIND_CELL, "text": c["text"]}
+                     for c in cells)
 
-        if bank == "OCBC":
-            cells = {n: t for n, _s, _e, t in
-                     ((spec.OCBC_CELLS[i], s, e, t)
-                      for i, s, e, t in _ocbc_cells(a_raw, a_off))}
-            desc_parts = [cells.get("description", "")]
-            for page, line_no, off, raw in g[1:]:
-                for i, s, e, t in _ocbc_cells(raw, off):
-                    if spec.OCBC_CELLS[i] == "description":
-                        desc_parts.append(t)
-            for page, line_no, off, raw in g:
-                for i, s, e, t in _ocbc_cells(raw, off):
-                    spans.append({"span_start": s, "span_end": e,
-                                  "span_kind": spec.SPAN_KIND_CELL, "text": t})
-            w_val, w_mark = parse_amount(cells.get("withdrawal", ""))
-            d_val, d_mark = parse_amount(cells.get("deposit", ""))
-            bal, _ = parse_amount(cells.get("balance", ""))
-            txn_date = parse_date(bank, cells.get("date", ""), period)
-            value_date = None
-            ref_cell = None
-        else:
-            sl = sl_doc
-            def cut(field: str) -> str:
-                s, e = sl[field]
-                return a_raw[s:e]
-            desc_parts = [cut("description")]
-            cs, ce = cont_slice
-            for page, line_no, off, raw in g[1:]:
-                desc_parts.append(raw[cs:ce])
-            if bank == "DBS":
-                w_val, w_mark = parse_amount(cut("debit"))
-                d_val, d_mark = parse_amount(cut("credit"))
-                value_date = parse_date(bank, cut("value_date"), None)
-            else:
-                w_val, w_mark = parse_amount(cut("withdrawal"))
-                d_val, d_mark = parse_amount(cut("deposit"))
-                value_date = (parse_date(bank, cut("value_date"), None)
-                              if bank == "HDFC" else None)
-            bal, _ = parse_amount(cut("balance"))
-            txn_date = parse_date(bank, cut("date"), None)
-            ref_cell = cut("ref").strip() if bank == "HDFC" else None
+        # absent cells (None) parse like blank ones
+        w_val, w_mark = parse_amount(wdr_c or "")
+        d_val, d_mark = parse_amount(dep_c or "")
+        value_date = parse_date(bank, vdate_c or "", None)
+        bal, _ = parse_amount(bal_c or "")
+        txn_date = parse_date(bank, date_c or "", period)
 
         # debit/credit assignment with CR/DR marker override (spec F2/F3)
         debit = credit = None
@@ -260,7 +365,7 @@ def parse_statement(doc: str, bank: str):
                 credit = d_val
 
         desc = " ".join(p for p in (_collapse(x) for x in desc_parts) if p)
-        ref = ref_cell or None
+        ref = (ref_c or "").strip() or None  # HDFC ref column
         if bank != "HDFC":
             m = re.match(spec.REF_RX, desc)
             if m:
@@ -270,22 +375,29 @@ def parse_statement(doc: str, bank: str):
             "txn_idx": txn_i, "bank": bank, "txn_date": txn_date,
             "value_date": value_date, "description": desc, "ref": ref,
             "debit": debit, "credit": credit, "balance": bal,
-            "page": a_page, "line_start": a_line, "line_end": l_line,
+            "page": page, "line_start": line_start, "line_end": line_end,
         })
     return spans, txns
 
 
 # ---------------------------------------------------------------------------
-# HTML parsing
+# HTML main content (D5)
 # ---------------------------------------------------------------------------
 
-def _decode_entities(s: str) -> str:
+_TAG = spec.rx(spec.HTML_TAG_RX)
+
+
+def _decode(s: str) -> str:
     for ent, ch in spec.HTML_ENTITIES:
         s = s.replace(ent, ch)
     return s
 
 
 def parse_html(doc: str):
+    """[{span_start, span_end, text}] for the non-blank text nodes inside
+    the content div (unclosed: to the end of the document). Offsets
+    index the RAW html and bound the stripped node; entities are decoded
+    in the text only (FIXTURES.md §3)."""
     start = doc.find(spec.HTML_CONTENT_OPEN)
     if start < 0:
         return []
@@ -293,28 +405,20 @@ def parse_html(doc: str):
     end = doc.find(spec.HTML_CONTENT_CLOSE, start)
     if end < 0:
         end = len(doc)
-    spans = []
+    out = []
     pos = start
-    tag = spec.rx(spec.HTML_TAG_RX)
-    for m in tag.finditer(doc, start, end):
-        seg_a, seg_b = pos, m.start()
-        pos = m.end()
-        spans.extend(_text_node(doc, seg_a, seg_b))
-    spans.extend(_text_node(doc, pos, end))
-    return spans
-
-
-def _text_node(doc: str, a: int, b: int):
-    raw = doc[a:b]
-    stripped = raw.strip()
-    if not stripped:
-        return []
-    lead = len(raw) - len(raw.lstrip())
-    s = a + lead
-    e = s + len(stripped)
-    return [{"span_start": s, "span_end": e,
-             "span_kind": spec.SPAN_KIND_MAIN,
-             "text": _decode_entities(stripped)}]
+    bounds = [(m.start(), m.end()) for m in _TAG.finditer(doc, start, end)]
+    bounds.append((end, end))
+    for a, b in bounds:
+        raw = doc[pos:a]
+        stripped = raw.strip()
+        if stripped:
+            lead = len(raw) - len(raw.lstrip())
+            s = pos + lead
+            out.append({"span_start": s, "span_end": s + len(stripped),
+                        "text": _decode(stripped)})
+        pos = b
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -330,7 +434,10 @@ def parse_document(doc: str | None):
     if kind is None:
         return [], []
     if kind == "HTML":
-        spans, txns = parse_html(doc), []
+        spans = [{"span_start": s["span_start"], "span_end": s["span_end"],
+                  "span_kind": spec.SPAN_KIND_MAIN, "text": s["text"]}
+                 for s in parse_html(doc)]
+        txns = []
     else:
         spans, txns = parse_statement(doc, kind)
     spans.sort(key=lambda s: s["span_start"])

@@ -1,7 +1,8 @@
 """End-to-end extraction plan (SURVEY.md §3.2).
 
 fused (default): transcripts --(P1-P3 Catalyst)--> resolved turns
-    --> ONE mapInPandas pass (D1-D11 + D5 HTML) --> records
+    --> ONE mapInArrow pass (D1-D11 + D5 HTML; vectorized fast path,
+        per-document python fallback) --> records
         (txn records + bank='HTML' main-span pseudo-records)
     transactions = F1-F8 Catalyst over txn records
     spans = txn spans U table_cell spans U main spans   (O3)
@@ -50,7 +51,7 @@ def build_records(turns: DataFrame, mode: str = "fused",
                   probe=None, profile: str = "full") -> DataFrame:
     """Classified turns -> structural records.
 
-    mode='fused': ONE mapInPandas pass over ALL turns (default; zero
+    mode='fused': ONE mapInArrow pass over ALL turns (default; zero
     text shuffles, and HTML main-content spans ride along as
     bank='HTML' pseudo-records so downstream spans/transactions never
     re-scan raw text).
@@ -64,7 +65,7 @@ def build_records(turns: DataFrame, mode: str = "fused",
 
     profile (fused only): output column subset the kernel materializes
     ('full' | 'transactions' | 'spans' — operators/tokenize.py). The
-    parse is identical; mapInPandas output is opaque to Catalyst's
+    parse is identical; mapInArrow output is opaque to Catalyst's
     column pruning, so a consumer that never reads span_text/cells
     (the transactions branch) or the field cells (the spans branch)
     otherwise pays Python build + Arrow + JVM read for them anyway
@@ -78,9 +79,9 @@ def build_records(turns: DataFrame, mode: str = "fused",
             # statement-heavy input splits across the cluster.
             src = src.repartition(salt_partitions, "conv_id", "turn_idx")
         # Arrow-vectorized fast path + per-doc python fallback
-        # (operators/tokenize_arrow.py) for every profile; the pandas
-        # kernel (tokenize.tokenize_kernel) remains the normative
-        # implementation and the fallback engine.
+        # (operators/tokenize_arrow.py) for every profile; the fallback
+        # is the pandas kernel (tokenize.tokenize_kernel) over the
+        # oracle's structural parse.
         from ..operators.tokenize_arrow import tokenize_arrow_kernel
         kernel = tokenize_arrow_kernel(profile)
         mapper, ddl = src.mapInArrow, _PROFILE_DDL[profile]

@@ -6,18 +6,24 @@
   ANSI mode and must date every txn in the frozen default year;
 - pipe-less / single-pipe continuation lines inside an OCBC lattice
   group — no cells, but the line still extends the txn span;
-- non-whitelisted roles (e.g. 'system') — ignored by engine AND oracle.
+- non-whitelisted roles (e.g. 'system') — ignored by engine AND oracle;
+- one multi-page statement per bank with an accented vowel in every
+  upper-case description word (codepoint width unchanged): non-ASCII
+  documents skip the Arrow fast path, so relational mode is their
+  independent check against the oracle.
 
 Each case is checked in BOTH execution modes against the oracle.
 """
 
 from __future__ import annotations
 
+import random
+import re
 from datetime import date, datetime
 
 import pytest
 
-from bank_statement_pdf_parser_spark import oracle
+from bank_statement_pdf_parser_spark import fixtures, oracle
 from bank_statement_pdf_parser_spark.plans.extract import extract_all
 
 from test_equality import _canon_spans, _canon_txns
@@ -34,6 +40,25 @@ def _uob_doc(txn_lines: list[str]) -> str:
         ["UNITED OVERSEAS BANK LIMITED", "Account: 0000000001",
          "Statement Period: x", ""] + txn_lines
         + ["Page 1 of 1", "UOB is regulated by MAS"])
+
+
+_WORD_RX = re.compile(r"\b(" + "|".join(w.upper() for w in fixtures.WORDS)
+                      + r")\b")
+
+
+def _accented(word: str) -> str:
+    # first vowel -> its acute form: one codepoint for one codepoint
+    for i, ch in enumerate(word):
+        j = "AEIOU".find(ch)
+        if j >= 0:
+            return word[:i] + "ÁÉÍÓÚ"[j] + word[i + 1:]
+    return word[:-1] + "Ý"
+
+
+def _accented_statement(bank: str, seed: int) -> str:
+    doc = fixtures.make_statement(bank, random.Random(seed),
+                                  adversarial=True)
+    return _WORD_RX.sub(lambda m: _accented(m.group(1)), doc)
 
 
 def _rows() -> list[dict]:
@@ -69,6 +94,10 @@ def _rows() -> list[dict]:
         {"conv_id": "adv-2", "turn_idx": 0, "role": "system", "text": dual,
          "tool": None, "ts": TS},
     ]
+    rows += [{"conv_id": f"adv-acc-{bank}", "turn_idx": 0, "role": "user",
+              "text": _accented_statement(bank, seed), "tool": None,
+              "ts": TS}
+             for seed, bank in enumerate(("UOB", "DBS", "HDFC", "OCBC"))]
     return rows
 
 
@@ -100,7 +129,7 @@ def test_adversarial_equality(spark, adv_path, mode):
     assert str(by_desc["PLAIN VS PLAIN"]["debit"]) == "100.00"
     assert str(by_desc["PLAIN VS PLAIN"]["credit"]) == "50.00"
     # OCBC default-period fallback: both dates land in the default year
-    ocbc = [t for t in ora_txns if t["bank"] == "OCBC"]
+    ocbc = [t for t in ora_txns if t["conv_id"] == "adv-1"]
     assert sorted(t["txn_date"] for t in ocbc) == \
         [date(2026, 1, 5), date(2026, 12, 6)]
     # pipe-less continuation extended the first OCBC span
@@ -109,3 +138,8 @@ def test_adversarial_equality(spark, adv_path, mode):
     assert "see note 12" in first_span["text"]
     # system-role conversation produced nothing
     assert not [t for t in eng_txns if t["conv_id"] == "adv-2"]
+    # every accented statement is non-ASCII and parses to transactions
+    for r in _rows():
+        if r["conv_id"].startswith("adv-acc-"):
+            assert not r["text"].isascii()
+            assert [t for t in eng_txns if t["conv_id"] == r["conv_id"]]

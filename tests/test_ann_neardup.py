@@ -68,8 +68,7 @@ def test_lattice_rail_voting_recovers_damaged_rows(spark):
     OCBC path's documented limitation)."""
     from bank_statement_pdf_parser_spark.operators.lattice import (
         cells_at_rails, vote_rails)
-    from bank_statement_pdf_parser_spark.operators.tokenize import (
-        _ocbc_cells)
+    from bank_statement_pdf_parser_spark.oracle.parser import _ocbc_cells
     good = "|   a    |x                   |        1.01|"
     bad = good[:-1]  # OCR lost the trailing rail
     df = spark.createDataFrame(

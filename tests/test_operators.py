@@ -5,26 +5,65 @@ the Spark-side parity is covered by test_equality / test_modes)."""
 from __future__ import annotations
 
 from bank_statement_pdf_parser_spark import spec
-from bank_statement_pdf_parser_spark.operators.tokenize import (
-    _ocbc_cells, _parse_doc)
 from bank_statement_pdf_parser_spark.oracle import parser as op
+from bank_statement_pdf_parser_spark.oracle.parser import (
+    _ocbc_cells, statement_records)
+
+_UOB_HDR = ["UNITED OVERSEAS BANK LIMITED", "Account: 0000000001",
+            "Statement Period: 01 Jan 2026 to 31 Jan 2026", ""]
+
+
+def _uob_row(d: str, desc: str, wdr: str, bal: str) -> str:
+    return f"{d:<12}{desc:<40}{wdr:>16}{'':<16}{bal:>16}"
+
+
+def _uob_page(p: int, n: int, body: list[str]) -> str:
+    return "\n".join(_UOB_HDR + body
+                     + [f"Page {p} of {n}", "UOB is regulated by MAS"])
 
 
 def test_line_offsets_roundtrip():
-    doc = "a\nbb\fccc\nd\ne\fff"
-    lines = op._lines_with_offsets(doc)
-    assert [(p, n) for p, n, _, _ in lines] == [
-        (1, 0), (1, 1), (2, 2), (2, 3), (2, 4), (3, 5)]
-    for _, _, off, raw in lines:
-        assert doc[off:off + len(raw)] == raw
+    """Pages and line numbers count across '\f' (line numbers are
+    document-global, 1-based pages), and every record's span indexes
+    the raw document."""
+    a = _uob_row("05 Jan 2026", "PAY A", "1.00", "5.00")
+    cont = f"{'':<12}{'MORE A':<40}"
+    b = _uob_row("06 Jan 2026", "PAY B", "2.00", "3.00")
+    c = _uob_row("07 Jan 2026", "PAY C", "3.00", "0.00")
+    doc = "\f".join([_uob_page(1, 3, [a, cont]), _uob_page(2, 3, [b]),
+                     _uob_page(3, 3, [c])])
+    recs = statement_records(doc, "UOB")
+    # page 1: lines 0-7 (anchor 4, continuation 5); page 2: 8-14;
+    # page 3: 15-21 — 4 header lines, then the body, then 2 footers
+    assert [r[:3] for r in recs] == [(1, 4, 5), (2, 12, 12), (3, 19, 19)]
+    assert [r[3] for r in recs] == [doc.index(a), doc.index(b),
+                                    doc.index(c)]
+    for r in recs:
+        assert doc[r[3]:r[4]] == r[5]
+    assert recs[0][5] == a + "\n" + cont.rstrip()
 
 
 def test_freq_boiler_rule():
-    doc = "X\nkeep1\nCHROME\fX\nkeep2\nCHROME\fX\nkeep3\nCHROME"
-    freq = op._freq_boiler_set(doc)
-    assert "CHROME" in freq and "X" in freq
-    assert "keep1" not in freq
-    assert op._freq_boiler_set("X\nCHROME") == set()  # single page: off
+    """D4 frequency rule: a chrome line on EVERY page of a document with
+    >= FREQ_RULE_MIN_PAGES pages is dropped (here it would otherwise
+    extend the transaction as a continuation); a single-page document
+    keeps it."""
+    chrome = f"{'':<12}{'ALL AMOUNTS IN SGD':<40}"
+    a = _uob_row("05 Jan 2026", "PAY A", "1.00", "5.00")
+    b = _uob_row("06 Jan 2026", "PAY B", "2.00", "3.00")
+    n = spec.FREQ_RULE_MIN_PAGES
+    doc = "\f".join(_uob_page(p, n, [a if p == 1 else b, chrome])
+                     for p in range(1, n + 1))
+    recs = statement_records(doc, "UOB")
+    assert len(recs) == n
+    assert all(r[1] == r[2] for r in recs)  # no continuation line
+    assert recs[0][12] == [a[12:52]]
+    single = _uob_page(1, 1, [a, chrome])
+    (rec,) = statement_records(single, "UOB")
+    assert (rec[1], rec[2]) == (4, 5)
+    assert rec[12] == [a[12:52], chrome[12:52]]
+    _, txns = op.parse_statement(single, "UOB")
+    assert txns[0]["description"] == "PAY A ALL AMOUNTS IN SGD"
 
 
 def test_ocbc_cells_offsets():
@@ -60,7 +99,7 @@ def test_page_carry_dedup_and_balance_bf():
     page2 = "\n".join(hdr(2) + ["BALANCE B/F", a, b] + foot(2))
     page3 = "\n".join(hdr(3) + [c] + foot(3))
     doc = "\f".join([page1, page2, page3])
-    recs = _parse_doc(doc, "UOB")
+    recs = statement_records(doc, "UOB")
     descs = [r[12][0].strip() for r in recs]
     assert descs == ["PAY A", "PAY B", "PAY C"]  # dup anchor dropped once
     spans, txns = op.parse_statement(doc, "UOB")
@@ -101,26 +140,21 @@ def test_html_entities_and_offsets():
         assert raw.strip() == raw  # trimmed bounds
     assert spans[0]["span_start"] == doc.index("a &amp; b")
 
+    # hand-computed D5 spans, (span_start, span_end, text)
+    def walk(d):
+        return [(s["span_start"], s["span_end"], s["text"])
+                for s in op.parse_html(d)]
 
-def test_tokenizer_matches_oracle_structurally(fixture_rows):
-    from bank_statement_pdf_parser_spark.oracle import parser as oracle
-    checked = 0
-    for r in fixture_rows:
-        doc = oracle.resolve_payload(r["text"], r["tool"])
-        kind = oracle.classify(doc) if doc else None
-        if kind in (None, "HTML"):
-            continue
-        recs = _parse_doc(doc, kind)
-        spans, txns = oracle.parse_statement(doc, kind)
-        assert len(recs) == len(txns)
-        for rec, t, s in zip(
-                recs, txns,
-                [x for x in spans if x["span_kind"] == "txn"]):
-            page, ls, le, ss, se, stext = rec[0], rec[1], rec[2], rec[3], rec[4], rec[5]
-            assert (page, ls, le) == (t["page"], t["line_start"], t["line_end"])
-            assert (ss, se, stext) == (s["span_start"], s["span_end"], s["text"])
-        checked += 1
-    assert checked > 50
+    assert walk('<html><body><p>x</p></body></html>') == []  # no div
+    # offsets: content div 0-20, <p> 21-23, ' ' 24, </p> 25-28, '\n' 29,
+    # <a ...> 30-51, text 52-66, </a> 67-70, '  tail' 71-76 (no close:
+    # the region runs to the end); whitespace-only nodes are skipped,
+    # entities decode in the text while offsets index the raw string
+    doc = ('<div class="content"><p> </p>\n<a href="x" title="y">'
+           'go &lt;b&gt; on</a>  tail')
+    assert walk(doc) == [(52, 67, "go <b> on"), (73, 77, "tail")]
+    assert walk("<html>" + doc + "</div><p>out</p>") == [
+        (58, 73, "go <b> on"), (79, 83, "tail")]
 
 
 def test_winnow_fingerprint_match_guarantee(spark):
