@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import spec
+from ..session import per_jvm
 
 DEC = "decimal(18,2)"
 
@@ -99,6 +100,12 @@ def normalize_records(records: DataFrame,
     caller names it).
     `carry`: extra input columns passed through untouched (the sink's
     bucket column)."""
+    return records.select(*_normalized_columns(carry))
+
+
+@per_jvm
+def _normalized_columns(carry: tuple[str, ...]) -> tuple[Column, ...]:
+    """normalize_records' select list, built once per JVM and carry."""
     w = amount_struct(F.col("wdr_cell"))
     d = amount_struct(F.col("dep_cell"))
     bal = amount_struct(F.col("bal_cell"))
@@ -142,12 +149,12 @@ def normalize_records(records: DataFrame,
         .when(has_ref, ref_from_desc)
     )
 
-    return records.select(
-        *carry, "conv_id", "turn_idx", "bank",
+    return (
+        *map(F.col, (*carry, "conv_id", "turn_idx", "bank")),
         txn_date.alias("txn_date"), value_date.alias("value_date"),
         description.alias("description"), ref.alias("ref"),
         debit.alias("debit"), credit.alias("credit"),
         bal["val"].alias("balance"),
         F.col("page"), F.col("line_start"), F.col("line_end"),
-        "rec_ord",  # the turn-local ordinal; the caller's txn_idx
+        F.col("rec_ord"),  # the turn-local ordinal; the caller's txn_idx
     )

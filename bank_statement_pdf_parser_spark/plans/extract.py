@@ -32,6 +32,7 @@ from ..functions.normalize import normalize_records
 from ..operators.html import html_main_spans
 from ..operators.tokenize import (RECORDS_DDL, RECORDS_SPAN_DDL,
                                   RECORDS_TXN_DDL)
+from ..session import per_jvm
 from ..sources.transcripts import with_resolved_payload
 
 _PROFILE_DDL = {"full": RECORDS_DDL, "transactions": RECORDS_TXN_DDL,
@@ -122,22 +123,6 @@ def build_spans(turns: DataFrame | None, records: DataFrame,
     sink's bucket column)."""
     if carry and not records_include_html:
         raise ValueError("carry requires records_include_html")
-    head_kind = (F.when(F.col("bank") == "HTML",
-                        F.lit(spec.SPAN_KIND_MAIN))
-                 .otherwise(F.lit(spec.SPAN_KIND_TXN))
-                 if records_include_html else F.lit(spec.SPAN_KIND_TXN))
-    head = F.array(F.struct(
-        F.col("span_start").alias("span_start"),
-        F.col("span_end").alias("span_end"),
-        head_kind.alias("span_kind"),
-        F.col("span_text").alias("text")))
-    cells = F.coalesce(
-        F.col("cells"),
-        F.array().cast("array<struct<start:int,end:int,text:string>>"))
-    cell_spans = F.transform(cells, lambda c: F.struct(
-        c["start"].alias("span_start"), c["end"].alias("span_end"),
-        F.lit(spec.SPAN_KIND_CELL).alias("span_kind"),
-        c["text"].alias("text")))
 
     def spans_of(df: DataFrame, base: Column, arr: Column,
                  kind: Column) -> DataFrame:
@@ -154,7 +139,8 @@ def build_spans(turns: DataFrame | None, records: DataFrame,
                         F.col("s.text").alias("text")))
 
     spans = spans_of(records, F.col("span_base"),
-                     F.concat(head, cell_spans), F.col("s.span_kind"))
+                     _record_spans(records_include_html),
+                     F.col("s.span_kind"))
     if records_include_html:
         return spans
     # relational cross-check mode: HTML turns via the D5 pandas UDF
@@ -162,6 +148,29 @@ def build_spans(turns: DataFrame | None, records: DataFrame,
                           html_main_spans(F.col("doc")),
                           F.lit(spec.SPAN_KIND_MAIN))
     return spans.unionByName(main_spans)
+
+
+@per_jvm
+def _record_spans(records_include_html: bool) -> Column:
+    """A record's [head, *cells] span array, built once per JVM
+    (session.per_jvm)."""
+    head_kind = (F.when(F.col("bank") == "HTML",
+                        F.lit(spec.SPAN_KIND_MAIN))
+                 .otherwise(F.lit(spec.SPAN_KIND_TXN))
+                 if records_include_html else F.lit(spec.SPAN_KIND_TXN))
+    head = F.array(F.struct(
+        F.col("span_start").alias("span_start"),
+        F.col("span_end").alias("span_end"),
+        head_kind.alias("span_kind"),
+        F.col("span_text").alias("text")))
+    cells = F.coalesce(
+        F.col("cells"),
+        F.array().cast("array<struct<start:int,end:int,text:string>>"))
+    cell_spans = F.transform(cells, lambda c: F.struct(
+        c["start"].alias("span_start"), c["end"].alias("span_end"),
+        F.lit(spec.SPAN_KIND_CELL).alias("span_kind"),
+        c["text"].alias("text")))
+    return F.concat(head, cell_spans)
 
 
 def build_transactions(records: DataFrame,

@@ -6,14 +6,48 @@ this package, whatever session created them)."""
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import pathlib
+import shutil
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[int] = set()
+# this process's package archive (package_zip without dest_dir)
+_PROCESS_ZIP: str | None = None
+
+
+def per_jvm(build):
+    """Memoize `build(*key)` (hashable args) per JVM gateway.
+
+    Hot plan builders (normalize_records, with_resolved_payload,
+    build_spans) return the same Column expressions on every call, but
+    building one costs Py4J round trips: one per F.* call plus ~5 for
+    PySpark 4's call-site capture. normalize_records' F1-F8 list alone
+    was ~2.5k round trips and 0.35 s per call, paid per sink bucket
+    group and per streaming micro-batch. A Column is an immutable JVM
+    expression, valid in any plan of any session on its JVM, so the
+    built value is reused until the gateway changes (a new JVM).
+    Only repeated calls gain: a one-shot extract_all builds each list
+    once either way. Never cache a Python-UDF Column: it binds its
+    SparkContext."""
+    memo: dict = {}
+
+    @functools.wraps(build)
+    def cached(*key):
+        # no lock: threads racing on a key (the sink's pipeline slot)
+        # build it twice, and either result is valid
+        gateway = SparkContext._gateway
+        hit = memo.get(key)
+        if hit is None or hit[0] is not gateway:
+            hit = memo[key] = (gateway, build(*key))
+        return hit[1]
+    return cached
 
 
 def _containing_zip() -> str | None:
@@ -35,15 +69,26 @@ def package_zip(dest_dir: str | None = None) -> str:
     """Zip this package for --py-files / addPyFile distribution.
 
     When the package is ALREADY running from a --py-files zip, returns
-    that archive (it is, by construction, the package distribution)."""
+    that archive (it is, by construction, the package distribution).
+    Without `dest_dir` the archive is built once per process in a
+    temp dir that is removed at exit; every later call (one per new
+    SparkContext, through ensure_shipped) reuses it."""
+    global _PROCESS_ZIP
     existing = _containing_zip()
     if existing is not None:
         return existing
-    pkg_dir = pathlib.Path(__file__).resolve().parent
     if dest_dir is None:
-        dest_dir = tempfile.mkdtemp(prefix="bspp_pyfiles_")
-    else:
-        os.makedirs(dest_dir, exist_ok=True)
+        if _PROCESS_ZIP is None:
+            tmp = tempfile.mkdtemp(prefix="bspp_pyfiles_")
+            atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+            _PROCESS_ZIP = _write_package_zip(tmp)
+        return _PROCESS_ZIP
+    os.makedirs(dest_dir, exist_ok=True)
+    return _write_package_zip(dest_dir)
+
+
+def _write_package_zip(dest_dir: str) -> str:
+    pkg_dir = pathlib.Path(__file__).resolve().parent
     zpath = os.path.join(dest_dir, "bank_statement_pdf_parser_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for f in sorted(pkg_dir.rglob("*.py")):

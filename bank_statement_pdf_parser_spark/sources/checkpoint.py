@@ -66,11 +66,11 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.extract import build_records, build_spans, build_transactions
-from ..session import ensure_shipped
+from ..session import ensure_shipped, per_jvm
 from .transcripts import with_resolved_payload
 
 BUCKET = "bucket"
@@ -98,8 +98,20 @@ LINEAGE_FIELDS = tuple(f.strip().split()[0]
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET, F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"))
+    return df.withColumn(BUCKET, _bucket_col(n_buckets))
+
+
+# built once per JVM (session.per_jvm), and reused within one run: the
+# bucket column by every group's staged write, the group filter by its
+# 2-3 reads
+@per_jvm
+def _bucket_col(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+@per_jvm
+def _in_group(group: tuple[int, ...]) -> Column:
+    return F.col(BUCKET).isin(*group)
 
 
 class ManifestStore:
@@ -338,7 +350,7 @@ class CheckpointedExtract:
                 finally:
                     pipeline.shutdown(wait=True)
                 raise RuntimeError("simulated crash for resume test")
-            gsrc = src.filter(F.col(BUCKET).isin(group))
+            gsrc = src.filter(_in_group(tuple(group)))
 
             # S6: per-bucket input metrics observed ON the extraction job
             # (conditional aggregates per bucket — no extra input scan).
@@ -408,7 +420,7 @@ class CheckpointedExtract:
         staged = (spark.read
                   .schema(f"{RECORDS_DDL}, {BUCKET} int")
                   .parquet(records_dir)
-                  .filter(F.col(BUCKET).isin(group)))
+                  .filter(_in_group(tuple(group))))
         if self.mode == "fused":
             return (build_spans(None, staged, records_include_html=True,
                                 carry=(BUCKET,)),
@@ -489,7 +501,7 @@ class CheckpointedExtract:
             rows = (spark.read
                     .schema(f"{RECORDS_DDL}, {BUCKET} int")
                     .parquet(records_dir)
-                    .filter(F.col(BUCKET).isin(group))
+                    .filter(_in_group(tuple(group)))
                     .groupBy(BUCKET)
                     .agg(F.min("conv_id").alias("cmin"),
                          F.max("conv_id").alias("cmax"))

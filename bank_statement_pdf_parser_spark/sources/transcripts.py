@@ -8,10 +8,13 @@ cross into Python.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import spec
+from ..session import per_jvm
 
 
 def load_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -75,38 +78,50 @@ def kind_col(doc: Column) -> Column:
 
 def with_resolved_payload(df: DataFrame) -> DataFrame:
     """P1/P2/P3 + OCBC period metadata, all turn-level and shuffle-free."""
-    doc = resolved_doc_col(F.col("text"), F.col("tool"))
-    out = (
+    c = _payload_columns()
+    return (
         df.filter(F.col("role").isin(*spec.ROLES))
-        .select("conv_id", "turn_idx", doc.alias("doc"))
+        .select("conv_id", "turn_idx", c.doc.alias("doc"))
         .filter(F.col("doc").isNotNull() & (F.length("doc") > 0))
-        .withColumn("kind", kind_col(F.col("doc")))
+        .withColumn("kind", c.kind)
         .filter(F.col("kind").isNotNull())
+        .withColumn("hdr", c.hdr)
+        .select("conv_id", "turn_idx", "doc", "kind", *c.period)
     )
+
+
+class _PayloadColumns(NamedTuple):
+    doc: Column                 # S2: the resolved document
+    kind: Column                # P3: 'HTML' | bank code | NULL
+    hdr: Column                 # the OCBC period header, over "doc"
+    period: tuple[Column, ...]  # p_start_mon/p_start_year/p_end_year
+
+
+@per_jvm
+def _payload_columns() -> _PayloadColumns:
+    """with_resolved_payload's expensive expressions, built once per
+    JVM (session.per_jvm)."""
     months = F.array(*[F.lit(m) for m in spec.MONTHS])
+    ocbc = F.col("kind") == "OCBC"
     # ONE full-document regex scan (group 0 into a short header string),
     # then the per-group extracts run over ~40 chars — three full-doc
     # scans per OCBC turn was a measured 2x overcost in this stage.
-    hdr = F.when(F.col("kind") == "OCBC",
-                 F.regexp_extract(F.col("doc"), spec.OCBC_PERIOD_RX, 0))
+    hdr = F.when(ocbc, F.regexp_extract(F.col("doc"), spec.OCBC_PERIOD_RX, 0))
     p = lambda g: F.regexp_extract(F.col("hdr"), spec.OCBC_PERIOD_RX, g)  # noqa: E731
     # Docs without the period header: regexp_extract yields '' and
     # array_position yields 0 — nullif-guard both so the '' -> int cast
     # cannot throw under ANSI mode; normalize.date_from_cell applies the
     # frozen default period (spec.OCBC_DEFAULT_*) to the NULLs, exactly
     # like the oracle's parse_date fallback.
-    return (
-        out.withColumn("hdr", hdr)
-        .withColumn(
-            "p_start_mon",
-            F.when(F.col("kind") == "OCBC",
-                   F.nullif(F.array_position(months, p(2)),
-                            F.lit(0)).cast("int")))
-        .withColumn("p_start_year",
-                    F.when(F.col("kind") == "OCBC",
-                           F.nullif(p(3), F.lit("")).cast("int")))
-        .withColumn("p_end_year",
-                    F.when(F.col("kind") == "OCBC",
-                           F.nullif(p(6), F.lit("")).cast("int")))
-        .drop("hdr")
+    return _PayloadColumns(
+        doc=resolved_doc_col(F.col("text"), F.col("tool")),
+        kind=kind_col(F.col("doc")),
+        hdr=hdr,
+        period=(
+            F.when(ocbc, F.nullif(F.array_position(months, p(2)),
+                                  F.lit(0)).cast("int")).alias("p_start_mon"),
+            F.when(ocbc, F.nullif(p(3), F.lit("")).cast("int"))
+            .alias("p_start_year"),
+            F.when(ocbc, F.nullif(p(6), F.lit("")).cast("int"))
+            .alias("p_end_year")),
     )
